@@ -21,9 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.text import tokenize
 from .operators.spotting import spot_ngram_join
-from .plans.annotate import AnnotateConfig, annotate
+from .plans.annotate import AnnotateConfig
 from .plans.build_stores import build_stores
-from .plans.materialize import canonical_annotations, materialize_triples
 
 # Deterministic linking world over the documents vocabulary.
 # (sf, uri, weight) — ambiguous sfs have several candidates.
@@ -207,7 +206,6 @@ def annotate_to_triples(
     spark: SparkSession,
     pages: DataFrame,
     stores: dict,
-    mode: str = "fused",
     model_bc=None,
     checkpoint_path: str | None = None,
     run_key: str | None = None,
@@ -216,36 +214,22 @@ def annotate_to_triples(
     of the pipeline; store build is the fixed-size offline model
     build, like the reference's wikistats ingestion).
 
-    mode="fused": map-only broadcast-model annotator with P2
-    canonicalization baked into the broadcast model (scale path,
-    plans/annotate_fused.py); the only wide exchange is the triple
-    distinct, reused across both triple branches. mode="relational":
-    stage-by-stage DataFrame pipeline (oracle surface,
-    plans/annotate.py) with join-based canonicalization."""
-    if mode == "fused":
-        if model_bc is None:
-            model_bc = world_model_bc(spark, stores)
-        from .plans.annotate_fused import annotate_mention_pairs
-        from .plans.materialize import materialize_triples_from_mention_pairs
+    The map-only broadcast-model annotator with P2 canonicalization
+    baked into the broadcast model (plans/annotate_fused.py). The pair
+    emitter dedups (url, uri) inside the map pass; url is the pages
+    primary key, so the pairs are globally distinct and the triple
+    pipeline has no wide exchange."""
+    if model_bc is None:
+        model_bc = world_model_bc(spark, stores)
+    from .plans.annotate_fused import annotate_mention_pairs
+    from .plans.materialize import materialize_triples_from_mention_pairs
 
-        # the pair emitter dedups (url, uri) per document inside the
-        # map pass; url is the pages primary key, so the pairs are
-        # globally distinct — the triple pipeline has no wide exchange
-        pairs = annotate_mention_pairs(
-            spark, pages, stores, AnnotateConfig(), model_bc
-        )
-        return materialize_triples_from_mention_pairs(
-            pairs, stores["entities"], checkpoint_path, run_key=run_key
-        )
-
-    ann = annotate(spark, pages, stores, AnnotateConfig())
-    red = spark.createDataFrame(WORLD_REDIRECTS, ["src_uri", "dst_uri"])
-    dis = spark.createDataFrame([(u,) for u in WORLD_DISAMBIG], ["uri"])
-    canon = canonical_annotations(ann, red, dis)
-    # canon feeds both mention- and type-triples: persist so the
-    # relational annotate pass runs once
-    canon = canon.persist()
-    return materialize_triples(canon, stores["entities"])
+    pairs = annotate_mention_pairs(
+        spark, pages, stores, AnnotateConfig(), model_bc
+    )
+    return materialize_triples_from_mention_pairs(
+        pairs, stores["entities"], checkpoint_path, run_key=run_key
+    )
 
 
 def world_model_bc(spark: SparkSession, stores: dict):

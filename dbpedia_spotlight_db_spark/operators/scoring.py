@@ -15,22 +15,15 @@ top-M by prior (cheap column math) BEFORE the context scoring (the
 expensive stage) — the reference's key latency trick, and at cluster
 scale it cuts the context-join fan-out by ~10x.
 
-Context scoring ships in two equivalent implementations (tests prove
-agreement):
-- ``context_scores_relational``: sparse dot as join+sum — pure
-  DataFrame, SQL-oracle checkable, bucket-joinable at web scale.
-- ``context_scores_pandas``: broadcast entity vectors as NumPy arrays,
-  cosine computed per Arrow batch in a pandas UDF (north_star path:
-  "vectorized cosine/ICF math in pandas UDFs, no per-row Python").
+Context scoring here is ``context_scores_relational``: sparse dot as
+join+sum — pure DataFrame, SQL-oracle checkable, bucket-joinable at
+web scale. The fused annotator (``plans/annotate_fused.py``) computes
+the same cosine in NumPy inside its map pass; tests compare the two.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
 
@@ -92,7 +85,7 @@ def prune_top_m_by_prior(cands: DataFrame, m: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Document context vectors (shared by both scoring paths)
+# Document context vectors
 # ---------------------------------------------------------------------------
 def doc_context_vectors(
     tokenized: DataFrame, tokens: DataFrame, icf: DataFrame
@@ -230,7 +223,7 @@ def context_scores_relational(
         .join(F.broadcast(entity_vectors.select("entity_id", "norm")), "entity_id")
         .withColumn(
             # zero norms (e.g. every context token has icf 0) score 0,
-            # matching the pandas/fused guards — and ANSI mode forbids
+            # matching the fused kernel's guard — and ANSI mode forbids
             # a bare divide-by-zero
             "ctx_score",
             F.when(
@@ -243,47 +236,6 @@ def context_scores_relational(
     return cands.join(
         dots, ["mention_id", "entity_id"], "left"
     ).withColumn("ctx_score", F.coalesce("ctx_score", F.lit(0.0)))
-
-
-def context_scores_pandas(
-    cands_with_ctx: DataFrame, entity_vectors_bc
-) -> DataFrame:
-    """C2 (vectorized-UDF): broadcast entity vectors as NumPy arrays;
-    each Arrow batch computes sparse-dot cosines with
-    ``np.searchsorted`` intersections (sorted token-id arrays).
-
-    Input must carry ``entity_id, ctx_token_ids, ctx_weights,
-    ctx_norm`` columns (from ``doc_context_vectors``)."""
-
-    @pandas_udf(T.DoubleType())
-    def _cosine(
-        entity_id: pd.Series,
-        token_ids: pd.Series,
-        weights: pd.Series,
-        norm: pd.Series,
-    ) -> pd.Series:
-        vecs = entity_vectors_bc.value  # entity_id -> (tids, ws, norm)
-        out = np.zeros(len(entity_id), dtype=np.float64)
-        for i in range(len(entity_id)):
-            ev = vecs.get(int(entity_id.iloc[i]))
-            # token_ids None <- left join: document had no in-vocab
-            # tokens; mention scores by prior alone (ctx 0)
-            if ev is None or token_ids.iloc[i] is None:
-                continue
-            etids, ews, enorm = ev
-            mtids = np.asarray(token_ids.iloc[i], dtype=np.int64)
-            mws = np.asarray(weights.iloc[i], dtype=np.float64)
-            idx = np.searchsorted(etids, mtids)
-            idx_ok = (idx < len(etids)) & (etids[np.minimum(idx, len(etids) - 1)] == mtids)
-            dot = float(np.dot(mws[idx_ok], ews[idx[idx_ok]]))
-            denom = float(norm.iloc[i]) * enorm
-            out[i] = dot / denom if denom > 0 else 0.0
-        return pd.Series(out)
-
-    return cands_with_ctx.withColumn(
-        "ctx_score",
-        _cosine("entity_id", "ctx_token_ids", "ctx_weights", "ctx_norm"),
-    )
 
 
 def combine_scores(

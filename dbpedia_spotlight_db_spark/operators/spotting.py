@@ -7,47 +7,33 @@ forms; emit every dictionary match; resolve overlaps leftmost-longest;
 drop matches whose surface form has annotation probability below the
 spotter threshold.
 
-Two implementations, proven equivalent by tests/test_spotting.py:
+Two consumers of the same semantics, cross-checked by
+tests/test_spotting.py:
 
-1. ``spot_ngram_join`` — the **relational scale path**: token n-grams
+1. ``spot_ngram_join`` — the **relational reference**: token n-grams
    are generated *inside the row* with array higher-order functions
    (transform/slice/sequence — zero shuffle, whole-stage codegen), then
-   broadcast-hash-joined against the surface-form dictionary. At
-   10^12 docs this is a map-only stage: no exchange until the
-   aggregation that consumes it. Dictionary max token length bounds
-   the n-gram fan-out (reference surface forms are 1-5 tokens).
+   broadcast-hash-joined against the surface-form dictionary.
+   Dictionary max token length bounds the n-gram fan-out (reference
+   surface forms are 1-5 tokens). ``plans/annotate.py`` spots with it.
 
-2. ``spot_aho_corasick`` — the **reference-parity path**: a
-   from-scratch Aho-Corasick automaton over token sequences, built
-   once on the driver, broadcast, and run inside an Arrow-batched
-   ``mapInPandas``. Matches the reference's broadcast-FSA design
-   (north_star: "broadcast Aho-Corasick/FSA dictionary inside
-   Arrow-batched pandas UDFs"). Preferred when the dictionary has
-   long patterns (n-gram fan-out would explode) or when the automaton
-   is reused across many stages.
+2. ``TokenAhoCorasick`` — a from-scratch Aho-Corasick automaton over
+   token sequences, the reference's broadcast-FSA design. It lives in
+   the broadcast model of the fused annotator
+   (``plans/annotate_fused.py``), which scans each page inside its
+   Arrow-batched map pass.
 """
 
 from __future__ import annotations
 
 from collections import deque
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
-
-MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-        T.StructField("surface_form", T.StringType(), False),
-    ]
-)
 
 
 # ---------------------------------------------------------------------------
-# Path 1: relational n-gram join (scale path, SQL-oracle checkable)
+# Relational n-gram join (reference path, SQL-oracle checkable)
 # ---------------------------------------------------------------------------
 def ngram_candidates(tokenized: DataFrame, max_len: int, doc_col: str = "url") -> DataFrame:
     """tokens:array<struct<text,start>> -> one row per token n-gram
@@ -95,7 +81,7 @@ def spot_ngram_join(
 
 
 # ---------------------------------------------------------------------------
-# Path 2: Aho-Corasick over token sequences (reference-parity path)
+# Aho-Corasick over token sequences (the fused annotator's spotter)
 # ---------------------------------------------------------------------------
 class TokenAhoCorasick:
     """From-scratch Aho-Corasick automaton whose alphabet is *tokens*
@@ -150,47 +136,6 @@ class TokenAhoCorasick:
         return hits
 
 
-def build_automaton(surface_forms: DataFrame) -> TokenAhoCorasick:
-    pats = [
-        tuple(r.surface_form.split(" "))
-        for r in surface_forms.select("surface_form").distinct().collect()
-    ]
-    return TokenAhoCorasick(pats)
-
-
-def spot_aho_corasick(
-    tokenized: DataFrame,
-    automaton_bc,
-    doc_col: str = "url",
-) -> DataFrame:
-    """Run the broadcast automaton inside Arrow-batched mapInPandas.
-
-    Batch shape: input partitions of (url, tokens) rows; output one
-    row per mention. The scan itself is pure-Python over the token
-    list but amortized per Arrow batch (the automaton does O(1) dict
-    hops per token — this is the same work the reference JVM does)."""
-
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac: TokenAhoCorasick = automaton_bc.value
-        for pdf in batches:
-            urls, starts, ends, sfs = [], [], [], []
-            for url, toks in zip(pdf["url"], pdf["tokens"]):
-                texts = [t["text"].lower() for t in toks]
-                for i, ln in ac.scan(texts):
-                    first, last = toks[i], toks[i + ln - 1]
-                    urls.append(url)
-                    starts.append(first["start"])
-                    ends.append(last["start"] + len(last["text"]))
-                    sfs.append(" ".join(texts[i : i + ln]))
-            yield pd.DataFrame(
-                {"url": urls, "start": starts, "end": ends, "surface_form": sfs}
-            )
-
-    return tokenized.select(F.col(doc_col).alias("url"), "tokens").mapInPandas(
-        scan_batches, MENTION_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------------
 # T4: spot filtering + overlap resolution
 # ---------------------------------------------------------------------------
@@ -231,21 +176,4 @@ def resolve_overlaps_greedy(mentions: DataFrame) -> DataFrame:
 
     return mentions.groupBy("url").applyInPandas(
         _resolve, mentions.schema
-    )
-
-
-def resolve_overlaps_longest_per_start(mentions: DataFrame) -> DataFrame:
-    """Relational (SQL-oracle-checkable) variant: keep only the longest
-    mention at each start offset. Weaker than greedy (doesn't suppress
-    nested-at-later-offset matches) but a pure window — used by the
-    DuckDB oracle to cross-check the spotting stage."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("url", "start").orderBy(
-        F.desc("end"), F.asc("surface_form")
-    )
-    return (
-        mentions.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

@@ -5,6 +5,11 @@ Stage order preserves the reference's pruning discipline: the
 annotation-probability threshold (T4) and overlap resolution run
 BEFORE any join; candidate pruning by prior (two-step) runs before
 context scoring.
+
+This is the pure-DataFrame reference: n-gram-join spotting and
+join+sum cosine scoring, checkable as engine SQL. The production pass
+is the fused map-only annotator (``plans/annotate_fused.py``); tests
+and the benchmark gate compare the two.
 """
 
 from __future__ import annotations
@@ -16,10 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.text import extract_text, tokenize
 from ..operators import scoring
 from ..operators.spotting import (
-    build_automaton,
     filter_by_annotation_prob,
     resolve_overlaps_greedy,
-    spot_aho_corasick,
     spot_ngram_join,
 )
 
@@ -31,8 +34,6 @@ class AnnotateConfig:
     top_m_prior: int = 20             # two-step prune width
     w_prior: float = 0.3
     w_ctx: float = 0.7
-    spotter: str = "ngram"            # "ngram" (relational) | "ac" (automaton)
-    scorer: str = "pandas"            # "pandas" (vectorized UDF) | "relational"
     langs: tuple[str, ...] = ("en", "fr", "es", "de", "zh")
     # T5: None = whole-document context (reference default for
     # single-paragraph texts); W = score against ±W tokens around the
@@ -51,20 +52,11 @@ def extract_and_tokenize(pages: DataFrame, cfg: AnnotateConfig) -> DataFrame:
     )
 
 
-def spot(
-    spark: SparkSession,
-    tokenized: DataFrame,
-    stores: dict,
-    cfg: AnnotateConfig,
-) -> DataFrame:
+def spot(tokenized: DataFrame, stores: dict, cfg: AnnotateConfig) -> DataFrame:
     """T3 spotting + T4 threshold & overlap resolution -> mentions with
     sf_id attached."""
     sf = stores["surface_forms"]
-    if cfg.spotter == "ac":
-        bc = spark.sparkContext.broadcast(build_automaton(sf))
-        raw = spot_aho_corasick(tokenized, bc)
-    else:
-        raw = spot_ngram_join(tokenized, sf, stores["max_sf_tokens"])
+    raw = spot_ngram_join(tokenized, sf, stores["max_sf_tokens"])
     with_sf = filter_by_annotation_prob(raw, sf, cfg.spotter_threshold)
     return resolve_overlaps_greedy(
         with_sf.select(
@@ -74,7 +66,6 @@ def spot(
 
 
 def disambiguate(
-    spark: SparkSession,
     mentions: DataFrame,
     tokenized: DataFrame,
     stores: dict,
@@ -106,28 +97,14 @@ def disambiguate(
             ),
             "mention_id",
         )
-    if cfg.scorer == "relational":
-        scored = scoring.context_scores_relational(
-            cands,
-            ctx,
-            stores["context_counts"],
-            stores["icf"],
-            stores["entity_vectors"],
-            ctx_key=ctx_key,
-        )
-    else:
-        from .annotate_fused import entity_vecs_dict
-
-        bc = spark.sparkContext.broadcast(entity_vecs_dict(stores))
-        # LEFT join: a document whose tokens are all out-of-vocabulary
-        # (or an all-stopword context window) has no context row but
-        # its mentions still score by prior (ctx_score 0), matching
-        # the relational and fused paths
-        scored = scoring.context_scores_pandas(
-            cands.join(ctx, ctx_key, "left"), bc
-        )
-        scored = scored.drop("ctx_token_ids", "ctx_weights", "ctx_norm")
-
+    scored = scoring.context_scores_relational(
+        cands,
+        ctx,
+        stores["context_counts"],
+        stores["icf"],
+        stores["entity_vectors"],
+        ctx_key=ctx_key,
+    )
     scored = scoring.combine_scores(scored, cfg.w_prior, cfg.w_ctx)
     best = scoring.best_k(scored, k=1)
     best = scoring.confidence_filter(best, cfg.confidence)
@@ -151,5 +128,5 @@ def annotate(
     cfg = cfg or AnnotateConfig()
     tokenized = extract_and_tokenize(pages, cfg)
     tokenized.persist()
-    mentions = spot(spark, tokenized, stores, cfg)
-    return disambiguate(spark, mentions, tokenized, stores, cfg)
+    mentions = spot(tokenized, stores, cfg)
+    return disambiguate(mentions, tokenized, stores, cfg)

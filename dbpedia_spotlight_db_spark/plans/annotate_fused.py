@@ -13,8 +13,8 @@ ZERO shuffles. The only shuffles in P1-P3 are then the triple
 
 Semantics are exactly those of the stage-by-stage relational pipeline
 in ``plans/annotate.py`` (tests/test_fused.py proves equality on the
-fixture corpus); the relational path remains the DuckDB-oracle surface
-and the fallback for model stores that exceed the broadcast budget.
+fixture corpus); the relational pipeline is the pure-DataFrame
+reference this pass is checked against, not an execution path.
 
 Scale math: the broadcast model is the same payload the reference mmaps
 per node (hundreds of MB for full Wikipedia — well inside executor
@@ -174,8 +174,8 @@ def build_model(
 
 def entity_vecs_dict(stores: dict) -> dict:
     """entity_id -> (sorted token_ids i64, weights f64, norm): the
-    NumPy form of the entity context vectors, shared by the fused
-    model and the relational pipeline's pandas scorer."""
+    NumPy form of the entity context vectors that ``_annotate_doc``'s
+    cosine reads from the model."""
     return {
         int(r.entity_id): (
             np.asarray(r.token_ids, dtype=np.int64),
@@ -363,6 +363,55 @@ def _annotate_doc(
         out_rows[6].append(srr)
 
 
+def _annotate_pass(
+    spark: SparkSession,
+    pages: DataFrame,
+    stores: dict,
+    cfg,
+    model_bc,
+    emit,
+    schema: T.StructType,
+) -> DataFrame:
+    """The one map pass: lang routing, then ``_annotate_doc`` over
+    every page of each Arrow batch into seven column buffers, which
+    ``emit(cols) -> pd.DataFrame`` turns into the batch's output."""
+    if model_bc is None:
+        model_bc = spark.sparkContext.broadcast(build_model(stores))
+    thr, conf = cfg.spotter_threshold, cfg.confidence
+    top_m, w_p, w_c = cfg.top_m_prior, cfg.w_prior, cfg.w_ctx
+    ctx_w = cfg.context_window
+    routed = pages.filter(F.col("lang").isin(*cfg.langs)).select("url", "html")
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model: LinkingModel = model_bc.value
+        for pdf in batches:
+            cols: list = [[], [], [], [], [], [], []]
+            for url, html in zip(pdf["url"], pdf["html"]):
+                _annotate_doc(
+                    url, html, model, thr, conf, top_m, w_p, w_c, cols,
+                    context_window=ctx_w,
+                )
+            yield emit(cols)
+
+    return routed.mapInPandas(run, schema)
+
+
+def _annotation_frame(cols: list) -> pd.DataFrame:
+    # column-wise buffers: typed ndarray/Series construction, never a
+    # row-at-a-time DataFrame of tuples
+    return pd.DataFrame(
+        {
+            "url": pd.Series(cols[0], dtype="object"),
+            "start": pd.Series(cols[1], dtype="int32"),
+            "end": pd.Series(cols[2], dtype="int32"),
+            "surface_form": pd.Series(cols[3], dtype="object"),
+            "uri": pd.Series(cols[4], dtype="object"),
+            "score": pd.Series(cols[5], dtype="float64"),
+            "second_rank_ratio": pd.Series(cols[6], dtype="float64"),
+        }
+    )
+
+
 def annotate_fused(
     spark: SparkSession,
     pages: DataFrame,
@@ -375,37 +424,10 @@ def annotate_fused(
     ``model_bc``: pass a prebuilt ``sc.broadcast(build_model(stores))``
     to reuse the model across jobs (the model is built once per run,
     like the reference loads SpotlightModel once at boot)."""
-    if model_bc is None:
-        model_bc = spark.sparkContext.broadcast(build_model(stores))
-    thr, conf = cfg.spotter_threshold, cfg.confidence
-    top_m, w_p, w_c = cfg.top_m_prior, cfg.w_prior, cfg.w_ctx
-    ctx_w = getattr(cfg, "context_window", None)
-    routed = pages.filter(F.col("lang").isin(*cfg.langs)).select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model: LinkingModel = model_bc.value
-        for pdf in batches:
-            # column-wise buffers: typed ndarray/Series construction,
-            # never a row-at-a-time DataFrame of tuples
-            cols: list = [[], [], [], [], [], [], []]
-            for url, html in zip(pdf["url"], pdf["html"]):
-                _annotate_doc(
-                    url, html, model, thr, conf, top_m, w_p, w_c, cols,
-                    context_window=ctx_w,
-                )
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(cols[0], dtype="object"),
-                    "start": pd.Series(cols[1], dtype="int32"),
-                    "end": pd.Series(cols[2], dtype="int32"),
-                    "surface_form": pd.Series(cols[3], dtype="object"),
-                    "uri": pd.Series(cols[4], dtype="object"),
-                    "score": pd.Series(cols[5], dtype="float64"),
-                    "second_rank_ratio": pd.Series(cols[6], dtype="float64"),
-                }
-            )
-
-    return routed.mapInPandas(run, ANNOTATION_SCHEMA)
+    return _annotate_pass(
+        spark, pages, stores, cfg, model_bc, _annotation_frame,
+        ANNOTATION_SCHEMA,
+    )
 
 
 PAIR_SCHEMA = T.StructType(
@@ -414,6 +436,17 @@ PAIR_SCHEMA = T.StructType(
         T.StructField("uri", T.StringType(), False),
     ]
 )
+
+
+def _pair_frame(cols: list) -> pd.DataFrame:
+    # sorted for row-order determinism across hash seeds
+    pairs = sorted(set(zip(cols[0], cols[4])))
+    return pd.DataFrame(
+        {
+            "url": pd.Series([p[0] for p in pairs], dtype="object"),
+            "uri": pd.Series([p[1] for p in pairs], dtype="object"),
+        }
+    )
 
 
 def annotate_mention_pairs(
@@ -426,41 +459,10 @@ def annotate_mention_pairs(
     """pages -> distinct canonical (url, uri) mention pairs, map-only.
 
     The triples pipeline only needs the per-document entity SET, so
-    the per-doc dedup happens inside the same Arrow pass — the 2-3x
-    larger annotation relation never crosses the Python/JVM boundary
-    (and, urls being unique per page, the output is globally distinct
+    the dedup happens inside the same Arrow pass — the 2-3x larger
+    annotation relation never crosses the Python/JVM boundary (and,
+    urls being unique per page, the output is globally distinct
     without any exchange)."""
-    if model_bc is None:
-        model_bc = spark.sparkContext.broadcast(build_model(stores))
-    thr, conf = cfg.spotter_threshold, cfg.confidence
-    top_m, w_p, w_c = cfg.top_m_prior, cfg.w_prior, cfg.w_ctx
-    ctx_w = getattr(cfg, "context_window", None)
-    routed = pages.filter(F.col("lang").isin(*cfg.langs)).select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model: LinkingModel = model_bc.value
-        for pdf in batches:
-            cols: list = [[], [], [], [], [], [], []]
-            urls_out: list = []
-            uris_out: list = []
-            uri_col = cols[4]
-            for url, html in zip(pdf["url"], pdf["html"]):
-                n0 = len(uri_col)
-                _annotate_doc(
-                    url, html, model, thr, conf, top_m, w_p, w_c, cols,
-                    context_window=ctx_w,
-                )
-                n1 = len(uri_col)
-                if n1 > n0:
-                    # sorted for row-order determinism across hash seeds
-                    distinct = sorted(set(uri_col[n0:n1]))
-                    urls_out.extend([url] * len(distinct))
-                    uris_out.extend(distinct)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls_out, dtype="object"),
-                    "uri": pd.Series(uris_out, dtype="object"),
-                }
-            )
-
-    return routed.mapInPandas(run, PAIR_SCHEMA)
+    return _annotate_pass(
+        spark, pages, stores, cfg, model_bc, _pair_frame, PAIR_SCHEMA
+    )

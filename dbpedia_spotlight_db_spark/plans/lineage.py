@@ -180,7 +180,7 @@ def run_flagship_resumable(
         world_stores,
     )
     from .annotate_fused import annotate_fused
-    from .materialize import materialize_triples_from_annotations
+    from .materialize import materialize_triples
     from ..plans.annotate import AnnotateConfig
 
     run = CheckpointedRun(spark, root, run_id)
@@ -224,6 +224,6 @@ def run_flagship_resumable(
         "triples",
         # ann is already parquet-backed (the annotations checkpoint),
         # so both triple branches re-read storage — no extra checkpoint
-        lambda: materialize_triples_from_annotations(ann, entities_ck),
+        lambda: materialize_triples(ann, entities_ck),
     )
     return triples

@@ -26,6 +26,22 @@ def canonical_annotations(
     return canonicalize(annotations, closure, disambiguations)
 
 
+def _type_triples(mentions: DataFrame, entities: DataFrame) -> DataFrame:
+    """(uri, rdf:type, t) for every entity ``mentions.uri`` uses. The
+    used set is at most |entities| rows, and the entity table is a
+    small store: broadcast it."""
+    used = mentions.select("uri").distinct()
+    return (
+        used.join(F.broadcast(entities.select("uri", "types")), "uri", "inner")
+        .select(
+            F.col("uri").alias("subj"),
+            F.lit(PRED_TYPE).alias("pred"),
+            F.explode("types").alias("obj"),
+        )
+        .distinct()
+    )
+
+
 def materialize_triples(
     canon: DataFrame, entities: DataFrame
 ) -> DataFrame:
@@ -34,17 +50,7 @@ def materialize_triples(
         F.lit(PRED_MENTIONS).alias("pred"),
         F.col("uri").alias("obj"),
     ).distinct()
-    used = canon.select(F.col("uri")).distinct()
-    type_triples = (
-        used.join(entities.select("uri", "types"), "uri", "inner")
-        .select(
-            F.col("uri").alias("subj"),
-            F.lit(PRED_TYPE).alias("pred"),
-            F.explode("types").alias("obj"),
-        )
-        .distinct()
-    )
-    return mention_triples.unionByName(type_triples)
+    return mention_triples.unionByName(_type_triples(canon, entities))
 
 
 def _checkpoint_complete(spark, path: str) -> bool:
@@ -66,8 +72,8 @@ def materialize_triples_from_mention_pairs(
     run_key: str | None = None,
 ) -> DataFrame:
     """Triples from already-distinct canonical (url, uri) mention
-    pairs (annotate_mention_pairs dedups per document inside the map
-    pass; urls are unique per page, so the pairs are globally
+    pairs (annotate_mention_pairs dedups each Arrow batch inside the
+    map pass; urls are unique per page, so the pairs are globally
     distinct with no exchange).
 
     Plan shape: the mention-triple branch is a pure projection — zero
@@ -96,59 +102,5 @@ def materialize_triples_from_mention_pairs(
         F.lit(PRED_MENTIONS).alias("pred"),
         F.col("uri").alias("obj"),
     )
-    used = pairs.select("uri").distinct()
-    type_triples = (
-        used.join(F.broadcast(entities.select("uri", "types")), "uri", "inner")
-        .select(
-            F.col("uri").alias("subj"),
-            F.lit(PRED_TYPE).alias("pred"),
-            F.explode("types").alias("obj"),
-        )
-        .distinct()
-    )
-    return mention_triples.unionByName(type_triples)
+    return mention_triples.unionByName(_type_triples(pairs, entities))
 
-
-def materialize_triples_from_annotations(
-    annotations: DataFrame,
-    entities: DataFrame,
-    checkpoint_path: str | None = None,
-) -> DataFrame:
-    """Triples straight from already-canonical annotations (the fused
-    path bakes P2 into the map pass).
-
-    Shuffle shape: ONE wide exchange — the (url, uri) distinct. Both
-    triple branches consume it; with ``checkpoint_path`` set the
-    distinct is written once to columnar storage and re-read by both
-    branches, so the map-only annotate pass over the corpus executes
-    exactly once (at cluster scale this is the P1/P2→P3 stage boundary
-    the lineage/resume layer checkpoints; an in-memory ``persist`` of
-    tens of millions of rows measured 4x slower than the columnar
-    write, so it is deliberately NOT used). Without a checkpoint the
-    two branches may recompute the upstream — fine at fixture scale
-    or when ``annotations`` is already storage-backed.
-
-    Shuffle-free alternative: when per-doc dedup can run inside the
-    annotate pass itself, use ``annotate_mention_pairs`` +
-    ``materialize_triples_from_mention_pairs`` — the production fused
-    path — which needs no (url, uri) exchange at all."""
-    ment = annotations.select(
-        F.col("url").alias("subj"), F.col("uri").alias("obj")
-    ).distinct()
-    if checkpoint_path:
-        ment.write.mode("overwrite").parquet(checkpoint_path)
-        ment = annotations.sparkSession.read.parquet(checkpoint_path)
-    mention_triples = ment.select(
-        "subj", F.lit(PRED_MENTIONS).alias("pred"), "obj"
-    )
-    used = ment.select(F.col("obj").alias("uri")).distinct()
-    type_triples = (
-        used.join(F.broadcast(entities.select("uri", "types")), "uri", "inner")
-        .select(
-            F.col("uri").alias("subj"),
-            F.lit(PRED_TYPE).alias("pred"),
-            F.explode("types").alias("obj"),
-        )
-        .distinct()
-    )
-    return mention_triples.unionByName(type_triples)

@@ -69,11 +69,6 @@ def main(argv: list[str] | None = None) -> None:
                 "tokens", "context_counts", "entity_vectors", "icf",
             )
         }
-        stores["max_sf_tokens"] = (
-            stores["surface_forms"]
-            .select(F.max(F.size(F.split("surface_form", " "))))
-            .collect()[0][0]
-        )
         redirects = None
         red_path = os.path.join(args.stores, "redirects")
         if os.path.exists(red_path):

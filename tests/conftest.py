@@ -1,9 +1,17 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dbpedia_spotlight_db_spark import fixtures
 from dbpedia_spotlight_db_spark.session import get_spark
+
+# The whole suite shares one session-scoped JVM. With the 48g default
+# heap its RSS grows past the RAM of a 16 GB host and the kernel kills
+# it mid-run, failing every later Spark test; a bounded heap makes the
+# JVM collect instead. A caller's SPARK_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -3,7 +3,8 @@
 1. Cased corpus anchors must be spottable (stores normalize to the
    spotters' lowercase token space) with correct annotation_prob.
 2. A document with zero in-vocabulary context tokens still gets its
-   mentions annotated (prior-only) on ALL three scorer paths.
+   mentions annotated (prior-only) on both the fused and the
+   relational scorer.
 """
 
 from __future__ import annotations
@@ -71,7 +72,7 @@ def test_cased_anchor_spottable(spark, cased_world):
 
 def test_oov_context_doc_still_annotated(spark, cased_world):
     # every context token is OOV w.r.t. the store vocabulary except the
-    # mention itself; all scorer paths must emit the mention
+    # mention itself; both scorers must emit the mention
     text = "zzq wwk Paris qqv xxj"
     html = f"<html><head><title>t</title></head><body>{text}</body></html>".encode()
     pages = spark.createDataFrame(
@@ -82,21 +83,16 @@ def test_oov_context_doc_still_annotated(spark, cased_world):
         return {(r.url, r.start, r.end, r.surface_form, r.uri) for r in df.collect()}
 
     fused = keys(annotate_fused(spark, pages, cased_world, AnnotateConfig()))
-    rel_pandas = keys(
-        annotate(spark, pages, cased_world, AnnotateConfig(scorer="pandas"))
-    )
-    rel_join = keys(
-        annotate(spark, pages, cased_world, AnnotateConfig(scorer="relational"))
-    )
-    assert fused == rel_pandas == rel_join
+    rel = keys(annotate(spark, pages, cased_world, AnnotateConfig()))
+    assert fused == rel
     assert any(k[3] == "paris" for k in fused)
 
 
 def test_all_stopword_context_doc_still_annotated(spark, cased_world):
     """T2 edge: every context token around the mention is a stopword
     (excluded from the analysis chain), so the context vector is empty
-    — all three scorer paths must still emit the mention, scored by
-    prior alone, and agree with each other."""
+    — the fused, relational and window paths must still emit the
+    mention, scored by prior alone, and agree with each other."""
     text = "the and of Paris to in is"
     html = f"<html><head><title>t</title></head><body>{text}</body></html>".encode()
     pages = spark.createDataFrame(
@@ -107,18 +103,13 @@ def test_all_stopword_context_doc_still_annotated(spark, cased_world):
         return {(r.url, r.start, r.end, r.surface_form, r.uri) for r in df.collect()}
 
     fused = keys(annotate_fused(spark, pages, cased_world, AnnotateConfig()))
-    rel_pandas = keys(
-        annotate(spark, pages, cased_world, AnnotateConfig(scorer="pandas"))
-    )
-    rel_join = keys(
-        annotate(spark, pages, cased_world, AnnotateConfig(scorer="relational"))
-    )
+    rel = keys(annotate(spark, pages, cased_world, AnnotateConfig()))
     win = keys(
         annotate_fused(
             spark, pages, cased_world, AnnotateConfig(context_window=2)
         )
     )
-    assert fused == rel_pandas == rel_join == win
+    assert fused == rel == win
     assert any(k[3] == "paris" for k in fused)
 
 

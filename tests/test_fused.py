@@ -7,7 +7,11 @@ from __future__ import annotations
 import pytest
 
 from dbpedia_spotlight_db_spark.plans.annotate import AnnotateConfig, annotate
-from dbpedia_spotlight_db_spark.plans.annotate_fused import annotate_fused
+from dbpedia_spotlight_db_spark.plans.annotate_fused import (
+    annotate_fused,
+    annotate_mention_pairs,
+    build_model,
+)
 
 
 @pytest.fixture(scope="module")
@@ -84,19 +88,40 @@ def test_fused_partition_independent(spark, small_pages, stores):
     assert a == b
 
 
+def test_fused_passes_are_map_only(spark, pages_df, stores):
+    """Both public faces of the fused pass run with no Exchange between
+    the pages scan and the Arrow map: the annotate pass is map-only."""
+    model_bc = spark.sparkContext.broadcast(build_model(stores))
+    cfg = AnnotateConfig()
+    for fn in (annotate_fused, annotate_mention_pairs):
+        df = fn(spark, pages_df, stores, cfg, model_bc)
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (fn.__name__, plan)
+
+
 def test_triples_fused_equals_relational(spark, small_pages, stores):
     """Full P1-P3: the zero-exchange fused shape (baked canon +
-    partition-local mention dedup) emits the same triple SET as the
-    relational join/distinct shape."""
-    from dbpedia_spotlight_db_spark.entrypoint import annotate_to_triples
+    in-pass mention dedup) emits the same triple SET as the relational
+    join/distinct shape."""
+    from dbpedia_spotlight_db_spark.entrypoint import (
+        WORLD_DISAMBIG,
+        WORLD_REDIRECTS,
+        annotate_to_triples,
+    )
+    from dbpedia_spotlight_db_spark.plans.materialize import (
+        canonical_annotations,
+        materialize_triples,
+    )
 
     def tset(df):
         return {(r.subj, r.pred, r.obj) for r in df.collect()}
 
-    fused = tset(
-        annotate_to_triples(spark, small_pages.repartition(7), stores, mode="fused")
+    fused = tset(annotate_to_triples(spark, small_pages.repartition(7), stores))
+    red = spark.createDataFrame(WORLD_REDIRECTS, ["src_uri", "dst_uri"])
+    dis = spark.createDataFrame([(u,) for u in WORLD_DISAMBIG], ["uri"])
+    canon = canonical_annotations(
+        annotate(spark, small_pages, stores, AnnotateConfig()), red, dis
     )
-    rel = tset(
-        annotate_to_triples(spark, small_pages, stores, mode="relational")
-    )
+    rel = tset(materialize_triples(canon, stores["entities"]))
     assert fused == rel and fused

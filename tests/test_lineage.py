@@ -49,6 +49,28 @@ def test_resume_identical_output(spark, run_root):
     assert resumed == full
 
 
+def test_resumable_equals_direct_triples(spark, run_root):
+    """The checkpointed lineage run (fused annotations per lang unit,
+    then materialize_triples) yields the same triples as the direct
+    annotate_to_triples path over the same pages and world stores."""
+    from dbpedia_spotlight_db_spark.entrypoint import (
+        annotate_to_triples,
+        documents_as_pages,
+        world_stores,
+    )
+
+    lineage = _triples_set(
+        run_flagship_resumable(spark, SF_DIR, run_root, "run_a")
+    )
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    direct = _triples_set(
+        annotate_to_triples(
+            spark, documents_as_pages(docs), world_stores(spark, docs)
+        )
+    )
+    assert lineage == direct and lineage
+
+
 def test_completed_units_skipped(spark, run_root):
     # run_b's lineage must show skipped entries for the units that
     # survived the simulated kill and a recompute for the deleted one

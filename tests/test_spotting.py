@@ -1,4 +1,5 @@
-"""T3/T4: n-gram-join spotting ≡ Aho-Corasick spotting; overlap policy."""
+"""T3/T4: n-gram-join spotting ≡ the fused annotator's Aho-Corasick
+spotter; overlap policy."""
 
 from __future__ import annotations
 
@@ -8,9 +9,7 @@ from pyspark.sql import functions as F
 from dbpedia_spotlight_db_spark.functions.text import tokenize
 from dbpedia_spotlight_db_spark.operators.spotting import (
     TokenAhoCorasick,
-    build_automaton,
     resolve_overlaps_greedy,
-    spot_aho_corasick,
     spot_ngram_join,
 )
 
@@ -32,11 +31,21 @@ def test_ngram_equals_ac(spark, pages_df, stores):
         "url", tokenize(F.col("text")).alias("tokens")
     )
     sf = stores["surface_forms"]
-    ng = spot_ngram_join(tokenized, sf, stores["max_sf_tokens"])
-    bc = spark.sparkContext.broadcast(build_automaton(sf))
-    ac = spot_aho_corasick(tokenized, bc)
-    assert _mention_set(ng) == _mention_set(ac)
-    assert ng.count() > 0
+    ng = _mention_set(spot_ngram_join(tokenized, sf, stores["max_sf_tokens"]))
+    ac = TokenAhoCorasick(
+        [tuple(r.surface_form.split(" ")) for r in sf.select("surface_form").collect()]
+    )
+    scanned = set()
+    for r in tokenized.collect():
+        texts = [t.text.lower() for t in r.tokens]
+        for i, ln in ac.scan(texts):
+            last = r.tokens[i + ln - 1]
+            scanned.add(
+                (r.url, r.tokens[i].start, last.start + len(last.text),
+                 " ".join(texts[i : i + ln]))
+            )
+    assert ng == scanned
+    assert ng
 
 
 def test_overlap_greedy_leftmost_longest(spark):
