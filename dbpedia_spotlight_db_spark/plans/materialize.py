@@ -96,7 +96,8 @@ def materialize_triples_from_mention_pairs(
         spark = pairs.sparkSession
         if not _checkpoint_complete(spark, checkpoint_path):
             pairs.write.mode("overwrite").parquet(checkpoint_path)
-        pairs = spark.read.parquet(checkpoint_path)
+        # the known schema skips Spark's schema-inference job
+        pairs = spark.read.schema(pairs.schema).parquet(checkpoint_path)
     mention_triples = pairs.select(
         F.col("url").alias("subj"),
         F.lit(PRED_MENTIONS).alias("pred"),

@@ -3,8 +3,13 @@
 Production target is Iceberg (north_rule: "Iceberg tables of
 Common-Crawl-style web pages"); the sandbox has no Iceberg jars and no
 network, so the seam writes partitioned Parquet plus a JSON manifest
-sidecar carrying the metrics Iceberg snapshots would carry. Nothing
-outside this module may hard-code a format.
+sidecar carrying the metadata Iceberg snapshots would carry: the row
+count (observed during the write, never re-counted), the schema as
+Spark reads the files back (every field nullable, partition columns
+last) and the layout (partition columns, or bucket key and count).
+``load`` reads with the manifest's schema, so opening a table submits
+no Spark job; a table whose manifest has no schema is inferred from
+its files. Nothing outside this module may hard-code a format.
 """
 
 from __future__ import annotations
@@ -13,7 +18,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -24,13 +29,64 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _manifest_path(root: str, name: str) -> str:
+    return os.path.join(root, f"{name}.manifest.json")
+
+
+def exists(root: str, name: str) -> bool:
+    """True when ``root`` holds a table ``name`` that ``load`` can read."""
+    return any(
+        os.path.exists(os.path.join(root, n)) for n in (f"{name}.parquet", name)
+    )
+
+
 def load(spark: SparkSession, name: str, root: str) -> DataFrame:
     """Read table ``name`` from ``root`` (Iceberg identifier if a
-    catalog is configured, else ``{root}/{name}.parquet`` or directory)."""
+    catalog is configured, else ``{root}/{name}.parquet`` or directory).
+    A directory ``save`` wrote is read with its manifest's schema, so
+    no schema-inference job runs."""
     p = os.path.join(root, f"{name}.parquet")
-    if not os.path.exists(p):
-        p = os.path.join(root, name)
-    return spark.read.parquet(p)
+    if os.path.exists(p):
+        return spark.read.parquet(p)
+    try:
+        schema = manifest(root, name).get("schema")
+    except FileNotFoundError:
+        schema = None
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.StructType.fromJson(schema))
+    return reader.parquet(os.path.join(root, name))
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested field, element and value nullable —
+    what a file source reports for the data it wrote."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_schema(schema: T.StructType, partition_by: list[str]) -> dict:
+    """The schema Spark reads back from a Parquet directory written
+    from ``schema``: all fields nullable, partition columns last."""
+    read = _nullable(schema)
+    data = [f for f in read.fields if f.name not in partition_by]
+    parts = [read[p] for p in partition_by]
+    return T.StructType(data + parts).jsonValue()
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an observation that holds its row count once a job
+    (the write) has consumed it: the count costs no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def save(
@@ -38,20 +94,35 @@ def save(
     name: str,
     root: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> str:
-    """Write a table through the seam. Parquet fallback writes a JSON
-    manifest with row count + partition layout (the lineage/metrics
-    tables in plans/lineage.py reference it)."""
+    """Overwrite a table through the seam. The Parquet fallback writes
+    a JSON manifest with the row count, the read-back schema and the
+    partition layout (the lineage/metrics tables in plans/lineage.py
+    reference it). The old manifest is deleted first, so a failed save
+    never leaves one that describes other files."""
     path = os.path.join(root, name)
-    writer = df.write.mode(mode)
+    partition_by = partition_by or []
+    _drop_manifest(root, name)
+    counted, obs = _counted(df)
+    writer = counted.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    spark = df.sparkSession
-    n = spark.read.parquet(path).count()
-    _write_manifest(root, name, rows=n, partition_by=partition_by or [])
+    _write_manifest(
+        root,
+        name,
+        rows=obs.get["rows"],
+        schema=_read_schema(df.schema, partition_by),
+        partition_by=partition_by,
+    )
     return path
+
+
+def _drop_manifest(root: str, name: str) -> None:
+    try:
+        os.remove(_manifest_path(root, name))
+    except FileNotFoundError:
+        pass
 
 
 def _write_manifest(root: str, name: str, **fields) -> None:
@@ -61,7 +132,7 @@ def _write_manifest(root: str, name: str, **fields) -> None:
         "format": "parquet-fallback(iceberg-seam)",
         **fields,
     }
-    with open(os.path.join(root, f"{name}.manifest.json"), "w") as f:
+    with open(_manifest_path(root, name), "w") as f:
         json.dump(manifest, f)
 
 
@@ -69,7 +140,7 @@ def manifest(root: str, name: str) -> dict:
     """Read back the manifest sidecar ``save`` wrote for ``name`` —
     the local stand-in for an Iceberg snapshot summary. Jobs read row
     counts from here instead of re-counting tables they just wrote."""
-    with open(os.path.join(root, f"{name}.manifest.json")) as f:
+    with open(_manifest_path(root, name)) as f:
         return json.load(f)
 
 
@@ -128,8 +199,10 @@ def save_bucketed(
     spark = df.sparkSession
     path = os.path.join(root, name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
+    _drop_manifest(root, name)
+    counted, obs = _counted(df)
     writer = (
-        df.write.mode("overwrite")
+        counted.write.mode("overwrite")
         .format("parquet")
         .option("path", path)
         .bucketBy(n_buckets, bucket_key)
@@ -140,7 +213,8 @@ def save_bucketed(
     _write_manifest(
         root,
         name,
-        rows=spark.table(name).count(),
+        rows=obs.get["rows"],
+        schema=_read_schema(df.schema, []),
         bucket_key=bucket_key,
         n_buckets=n_buckets,
         sorted=sort,

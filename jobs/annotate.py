@@ -70,9 +70,8 @@ def main(argv: list[str] | None = None) -> None:
             )
         }
         redirects = None
-        red_path = os.path.join(args.stores, "redirects")
-        if os.path.exists(red_path):
-            redirects = spark.read.parquet(red_path)
+        if catalog.exists(args.stores, "redirects"):
+            redirects = catalog.load(spark, "redirects", args.stores)
         model_bc = spark.sparkContext.broadcast(build_model(stores, redirects))
 
     if args.pages.startswith("world:"):

@@ -16,10 +16,14 @@ the (subj, pred, obj) store where one url owns MANY rows):
   mention-triple set REPLACES its old one wholesale (a re-fetched page
   may gain, lose, or change mentions — per-row upsert would leave
   stale triples behind, so replacement is per-URL, not per-row);
-- entity-level triples (rdf:type) are re-derived from the merged
-  mention set, so an entity that lost its last mention loses its type
-  rows too — the merged snapshot is row-identical to a from-scratch
-  annotate of the corpus' current state (pinned by tests/test_refresh.py);
+- entity-level triples (rdf:type) follow the merged mention set: a
+  base entity row is kept iff a KEPT base mention still references
+  the entity, and the delta's own entity rows union in (the delta
+  annotate emits them for exactly the entities it mentions), so an
+  entity that lost its last mention loses its type rows too — the
+  merged snapshot is row-identical to a from-scratch annotate of the
+  corpus' current state when base and delta share one entity store
+  (pinned by tests/test_refresh.py);
 - urls listed in --gone-urls are tombstones: their triples are
   dropped and nothing replaces them (410s, parked domains, robots
   removals);
@@ -31,7 +35,12 @@ tombstone key sets when they fit — the same discipline as
 dedup_survivors and crawl_upsert; with the base snapshot bucketed on
 subj via catalog.save_bucketed even the shuffle disappears). The
 delta annotate itself is the map-only fused plan — refresh adds no
-wide exchange beyond what a fresh annotate of the delta needs.
+wide exchange beyond what a fresh annotate of the delta needs, and the
+merge reads the annotated delta once per branch (mention rows, entity
+rows), never again for the live-entity set. The base snapshot opens
+with its manifest's schema (no inference job) and the save counts its
+rows inside the write job, so the save of the merged snapshot is the
+cycle's only Spark action (its jobs are that write's query stages).
 
 Local smoke:
 
@@ -55,7 +64,8 @@ from dbpedia_spotlight_db_spark.plans.materialize import PRED_MENTIONS
 
 def merge_triples(base, fresh, delta_urls, gone_urls=None):
     """Pure merge (tested directly): base/fresh are (subj, pred, obj)
-    DataFrames, delta_urls/gone_urls are 1-column (subj) url key sets.
+    DataFrames, delta_urls/gone_urls are 1-column (subj) url key sets
+    (duplicate keys are fine: they do not change a left-anti join).
 
     The triple store holds two subject kinds (plans/materialize.py):
     page-level ``dbo:mentions`` rows (subj = url) and entity-level
@@ -68,22 +78,32 @@ def merge_triples(base, fresh, delta_urls, gone_urls=None):
       must exist iff the entity is STILL referenced by the merged
       mention set (a re-crawl that removed an entity's only mention
       must also remove its type triples, exactly as a from-scratch
-      run would) — so base ∪ fresh entity rows dedup, then a semi-join
-      against the merged mentions' distinct objects keeps the live
-      ones. Both key sets here are entity-scale, not corpus-scale."""
+      run would). The live set is the distinct objects of the KEPT
+      base mentions only; entity rows are
+      ``distinct((base entity rows ⋉ live) ∪ fresh entity rows)``.
+
+    Precondition for that rule: ``fresh`` is an ``annotate_to_triples``
+    output (every fresh entity row's subject is the object of a fresh
+    mention, so fresh entity rows are all live) and ``base`` was built
+    on the same entity store (a base entity row dropped here because
+    only fresh mentions reference it is also in fresh). Under it the
+    result equals the semi-join of all entity rows against the merged
+    mentions' objects, while ``fresh`` — the annotated delta, a Python
+    pass per read — is read once per branch, not again for the live
+    set. Both key sets here are entity-scale, not corpus-scale."""
     drop = delta_urls
     if gone_urls is not None:
         drop = drop.unionByName(gone_urls)
     is_mention = F.col("pred") == PRED_MENTIONS
-    kept_m = base.filter(is_mention).join(drop.distinct(), "subj", "left_anti")
-    mentions = kept_m.unionByName(fresh.filter(is_mention))
+    kept = base.filter(is_mention).join(drop, "subj", "left_anti")
+    live = kept.select(F.col("obj").alias("subj")).distinct()
     entity_rows = (
         base.filter(~is_mention)
+        .join(live, "subj", "left_semi")
         .unionByName(fresh.filter(~is_mention))
         .distinct()
     )
-    live = mentions.select(F.col("obj").alias("subj")).distinct()
-    return mentions.unionByName(entity_rows.join(live, "subj", "left_semi"))
+    return kept.unionByName(fresh.filter(is_mention)).unionByName(entity_rows)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -18,6 +19,24 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 def spark():
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_during(spark):
+    """``jobs_during(fn)`` -> ``(fn(), ids of the Spark jobs fn submitted)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -128,3 +128,23 @@ def test_mention_pair_checkpoint_resume_skips_rewrite(spark, tmp_path):
     }
     assert got1 == got2  # re-read, not re-written
     assert mtimes1 == mtimes2
+
+
+def test_mention_pair_checkpoint_reread_submits_no_job(spark, jobs_during, tmp_path):
+    """A completed checkpoint is re-read with the pairs' known schema:
+    resuming submits no schema-inference job."""
+    from dbpedia_spotlight_db_spark.plans.materialize import (
+        materialize_triples_from_mention_pairs,
+    )
+
+    pairs = spark.createDataFrame([("u1", "dbr:A")], "url string, uri string")
+    entities = spark.createDataFrame([("dbr:A", ["T1"])], ["uri", "types"])
+    ck = str(tmp_path / "mentions")
+    materialize_triples_from_mention_pairs(pairs, entities, ck)
+    t, jobs = jobs_during(
+        lambda: materialize_triples_from_mention_pairs(pairs, entities, ck)
+    )
+    assert jobs == []
+    assert {tuple(r) for r in t.collect()} == {
+        ("u1", "dbo:mentions", "dbr:A"), ("dbr:A", "rdf:type", "T1"),
+    }

@@ -93,3 +93,77 @@ def test_merge_triples_is_unhinted(spark):
     assert "ResolvedHint" not in logical
     rows = {(r["subj"], r["obj"]) for r in merged.collect()}
     assert rows == {("u1", "o"), ("u2", "o2")}
+
+
+TRIPLE = "subj string, pred string, obj string"
+M, TY = "dbo:mentions", "rdf:type"
+
+# base snapshot of three pages over entities A..C (each typed); the
+# fresh rows are what annotate_to_triples emits for the re-fetched u3
+# and the new u4: mention rows plus the type rows of every entity they
+# mention
+BASE = [
+    ("u1", M, "A"), ("u1", M, "B"), ("u2", M, "B"), ("u3", M, "C"),
+    ("A", TY, "T1"), ("B", TY, "T2"), ("C", TY, "T3"), ("C", TY, "T4"),
+]
+FRESH = [
+    ("u3", M, "B"), ("u3", M, "D"), ("u4", M, "D"),
+    ("B", TY, "T2"), ("D", TY, "T5"),
+]
+
+
+def _keys(spark, urls):
+    return spark.createDataFrame([(u,) for u in urls], "subj string")
+
+
+def _merge_rows(spark, delta, gone, fresh=None):
+    base = spark.createDataFrame(BASE, TRIPLE)
+    fresh = fresh if fresh is not None else spark.createDataFrame(FRESH, TRIPLE)
+    merged = merge_triples(base, fresh, _keys(spark, delta), _keys(spark, gone))
+    return sorted(tuple(r) for r in merged.collect())
+
+
+def test_merge_triples_entity_rows(spark):
+    """u3 (the only page mentioning C) is re-fetched without C, u1 is
+    tombstoned (A's only page): C and A lose their types; D, mentioned
+    only by fresh rows, gets its type exactly once; B, mentioned by the
+    kept u2 AND by fresh rows, keeps one type row."""
+    got = _merge_rows(spark, delta=["u3", "u4"], gone=["u1"])
+    assert got == sorted([
+        ("u2", M, "B"), ("u3", M, "B"), ("u3", M, "D"), ("u4", M, "D"),
+        ("B", TY, "T2"), ("D", TY, "T5"),
+    ])
+
+
+def test_merge_triples_keeps_types_of_carried_mentions(spark):
+    """An entity whose mentions are all carried over keeps its types
+    although no fresh row mentions it."""
+    got = _merge_rows(spark, delta=["u4"], gone=[], fresh=spark.createDataFrame(
+        [("u4", M, "D"), ("D", TY, "T5")], TRIPLE))
+    assert got == sorted(BASE + [("u4", M, "D"), ("D", TY, "T5")])
+
+
+def test_merge_triples_duplicate_keys(spark):
+    """Duplicate delta and tombstone keys (a url both re-fetched and
+    tombstoned, a key repeated) merge like the deduplicated key sets."""
+    dedup = _merge_rows(spark, delta=["u3", "u4"], gone=["u1"])
+    dup = _merge_rows(spark, delta=["u3", "u4", "u3", "u4"],
+                      gone=["u1", "u1", "u3"])
+    assert dup == dedup
+
+
+def test_merge_triples_reads_fresh_once_per_branch(spark):
+    """The annotated delta is a Python pass: the merged plan runs it
+    once for the mention rows and once for the entity rows, and not
+    again for the live-entity set."""
+    def passthrough(batches):
+        yield from batches
+
+    fresh = spark.createDataFrame(FRESH, TRIPLE).mapInPandas(passthrough, TRIPLE)
+    base = spark.createDataFrame(BASE, TRIPLE)
+    merged = merge_triples(base, fresh, _keys(spark, ["u3", "u4"]), _keys(spark, ["u1"]))
+    assert sorted(tuple(r) for r in merged.collect()) == _merge_rows(
+        spark, delta=["u3", "u4"], gone=["u1"])
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 2, final
