@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .functions.text import tokenize
 from .operators.spotting import spot_ngram_join
 from .plans.annotate import AnnotateConfig
-from .plans.build_stores import build_stores
+from .plans.build_stores import STORE_BUCKET_KEYS, build_stores
 
 # Deterministic linking world over the documents vocabulary.
 # (sf, uri, weight) — ambiguous sfs have several candidates.
@@ -206,7 +206,7 @@ def annotate_to_triples(
     spark: SparkSession,
     pages: DataFrame,
     stores: dict,
-    model_bc=None,
+    model_bc,
     checkpoint_path: str | None = None,
     run_key: str | None = None,
 ) -> DataFrame:
@@ -218,9 +218,8 @@ def annotate_to_triples(
     baked into the broadcast model (plans/annotate_fused.py). The pair
     emitter dedups (url, uri) inside the map pass; url is the pages
     primary key, so the pairs are globally distinct and the triple
-    pipeline has no wide exchange."""
-    if model_bc is None:
-        model_bc = world_model_bc(spark, stores)
+    pipeline has no wide exchange. ``model_bc``: the broadcast model
+    of ``stores`` (``load_model``)."""
     from .plans.annotate_fused import annotate_mention_pairs
     from .plans.materialize import materialize_triples_from_mention_pairs
 
@@ -235,11 +234,8 @@ def annotate_to_triples(
 def world_model_bc(spark: SparkSession, stores: dict):
     """Broadcast LinkingModel with the WORLD closure/disambig baked in.
 
-    The redirect set is a code literal, so the closure is resolved
-    driver-side (``closure_dict`` — the tested pure-Python twin of the
-    distributed pointer-jump) instead of spending Spark actions on a
-    3-row DataFrame; generic callers with DataFrame redirects keep
-    going through ``build_model(stores, redirects, disambiguations)``."""
+    The redirect set is a code literal, so it goes to ``closure_dict``
+    directly instead of through a DataFrame."""
     from .operators.closure import closure_dict
     from .plans.annotate_fused import build_model
 
@@ -247,6 +243,39 @@ def world_model_bc(spark: SparkSession, stores: dict):
     model.canon_map = closure_dict(WORLD_REDIRECTS)
     model.disambig = frozenset(WORLD_DISAMBIG)
     return spark.sparkContext.broadcast(model)
+
+
+def _world_docs(spark: SparkSession, spec: str) -> DataFrame:
+    return spark.read.parquet(f"{spec.split(':', 1)[1]}/documents.parquet")
+
+
+def load_model(spark: SparkSession, spec: str) -> tuple[dict, object]:
+    """The model loader every job calls: (stores, broadcast model).
+    ``world:<sf_dir>`` is the fixture world (``world_model_bc``); any
+    other ``spec`` is a warehouse root from jobs/build_stores.py, whose
+    ``redirects``/``disambiguations`` tables, where present, go into
+    ``build_model``."""
+    from .plans.annotate_fused import build_model
+    from .sources import catalog
+
+    if spec.startswith("world:"):
+        stores = world_stores(spark, _world_docs(spark, spec))
+        return stores, world_model_bc(spark, stores)
+    stores = {name: catalog.load(spark, name, spec) for name in STORE_BUCKET_KEYS}
+    redirects, disambiguations = (
+        catalog.load(spark, name, spec) if catalog.exists(spec, name) else None
+        for name in ("redirects", "disambiguations")
+    )
+    model = build_model(stores, redirects, disambiguations)
+    return stores, spark.sparkContext.broadcast(model)
+
+
+def load_pages(spark: SparkSession, spec: str) -> DataFrame:
+    """``world:<sf_dir>`` wraps the fixture's documents; any other
+    ``spec`` is a parquet pages path."""
+    if spec.startswith("world:"):
+        return documents_as_pages(_world_docs(spark, spec))
+    return spark.read.parquet(spec)
 
 
 def flagship(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
@@ -264,4 +293,6 @@ def flagship(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
     pages = documents_as_pages(
         replicate_docs(docs.repartition(npart), replicate)
     )
-    return annotate_to_triples(spark, pages, stores)
+    return annotate_to_triples(
+        spark, pages, stores, world_model_bc(spark, stores)
+    )

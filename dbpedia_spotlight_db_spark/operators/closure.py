@@ -5,10 +5,15 @@ path in SURVEY.md §1.1, UNVERIFIED-LOCALLY): follow Wikipedia redirect
 edges transitively to a canonical DBpedia URI; drop annotations whose
 target is a disambiguation page.
 
-Spark-first design: the closure is computed by **pointer jumping**
-(iterated self-join, f := f∘f), which converges in O(log(longest
-chain)) shuffles instead of O(chain) — 12 iterations covers chains of
-4096. Each iteration is localCheckpoint()ed to cut lineage growth.
+``closure_dict`` is the model's closure: ``build_model`` resolves the
+collected edges on the driver, once. ``redirect_closure`` is its
+distributed twin for the relational reference and the queries:
+**pointer jumping** (iterated self-join, f := f∘f), which converges in
+O(log(longest chain)) shuffles instead of O(chain) — 12 iterations
+covers chains of 4096; each iteration is localCheckpoint()ed to cut
+lineage growth. In both, a source with several edges keeps its
+lexicographically smallest dst, so no result depends on edge order
+or partitioning.
 
 Cycle semantics (matching the reference's visited-set bailout: a
 redirect chain that ever revisits a node is treated as no redirect):
@@ -31,8 +36,9 @@ def redirect_closure(redirects: DataFrame, max_iter: int = 12) -> DataFrame:
 
     Pointer jumping: each pass rewrites dst := f(dst) when dst is
     itself a redirect source, doubling resolved path length per pass.
+    A source with several edges keeps its smallest ``dst_uri``.
     """
-    cur = redirects.select("src_uri", "dst_uri").dropDuplicates(["src_uri"])
+    cur = redirects.groupBy("src_uri").agg(F.min("dst_uri").alias("dst_uri"))
     for _ in range(max_iter):
         nxt = (
             cur.alias("a")
@@ -74,21 +80,18 @@ def redirect_closure(redirects: DataFrame, max_iter: int = 12) -> DataFrame:
 
 
 def closure_dict(edges) -> dict[str, str]:
-    """Driver-side twin of ``redirect_closure`` for LITERAL edge
-    lists (the flagship's synthesized world, test fixtures): visited-
+    """The model's redirect closure, resolved on the driver: visited-
     set chain following, any revisit -> no redirect — exactly the
-    reference's bailout semantics that the distributed operator
-    reproduces (tests/test_property.py fuzzes their equivalence).
-    Use when the redirect set is a driver-side literal: a dict build
-    beats 2+ Spark actions of pointer-jump latency on a 3-row input.
-    ``edges`` is an iterable of (src, dst); duplicate sources are
-    rejected (the DataFrame path's dropDuplicates picks an arbitrary
-    winner, which a literal world should never rely on)."""
+    reference's bailout semantics, which ``redirect_closure``
+    reproduces distributed (tests/test_property.py fuzzes their
+    equivalence). ``edges`` is an iterable of (src, dst); a source
+    with several edges keeps its smallest dst, as in
+    ``redirect_closure``. Returns {src: canonical dst} for every
+    source that resolves to another uri."""
     nxt: dict[str, str] = {}
     for s, d in edges:
-        if s in nxt:
-            raise ValueError(f"duplicate redirect source: {s!r}")
-        nxt[s] = d
+        if s not in nxt or d < nxt[s]:
+            nxt[s] = d
     out: dict[str, str] = {}
     for src in nxt:
         seen = {src}

@@ -37,6 +37,7 @@ from ..functions.text import (
     _stem_cached,
     LINKING_STOPWORDS,
 )
+from ..operators.closure import closure_dict
 from ..operators.spotting import TokenAhoCorasick
 
 ANNOTATION_SCHEMA = T.StructType(
@@ -90,18 +91,21 @@ def build_model(
     into the model (the reference resolves the redirect closure at
     model-build time — WikipediaToDBpediaClosure): the fused pass then
     emits canonical annotations directly and the relational
-    ``canonicalize`` join is not needed downstream.
+    ``canonicalize`` join is not needed downstream. The closure is
+    resolved on the driver (``closure_dict`` of the collected edges;
+    the model holds one entry per redirect source either way).
 
-    The four store collects are independent Spark actions submitted
-    CONCURRENTLY (thread pool): with lazily-persisted store tables the
-    sequential form materialized the shared P0 lineage one chain at a
-    time; concurrent submission overlaps those jobs (Spark's scheduler
-    and block manager are thread-safe; shared cached parents are
-    computed once and served to the other jobs)."""
+    The five store collects (seven with redirects and disambiguations)
+    are independent Spark actions submitted CONCURRENTLY (thread pool):
+    with lazily-persisted store tables the sequential form materialized
+    the shared P0 lineage one chain at a time; concurrent submission
+    overlaps those jobs (Spark's scheduler and block manager are
+    thread-safe; shared cached parents are computed once and served to
+    the other jobs)."""
     from concurrent.futures import ThreadPoolExecutor
 
     ent = stores["entities"].select("entity_id", "uri", "support")
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with ThreadPoolExecutor(max_workers=7) as pool:
         f_sf = pool.submit(
             stores["surface_forms"]
             .select("surface_form", "sf_id", "annotation_prob")
@@ -123,11 +127,20 @@ def build_model(
             .collect
         )
         f_vecs = pool.submit(entity_vecs_dict, stores)
+        f_red = f_dis = None
+        if redirects is not None:
+            f_red = pool.submit(redirects.select("src_uri", "dst_uri").collect)
+        if disambiguations is not None:
+            f_dis = pool.submit(disambiguations.select("uri").collect)
         sf_rows = f_sf.result()
         total_support = f_total.result()
         cand_rows = f_cand.result()
         vocab_rows = f_vocab.result()
         entity_vecs = f_vecs.result()
+        canon_map = closure_dict(f_red.result()) if f_red else {}
+        disambig = (
+            frozenset(r.uri for r in f_dis.result()) if f_dis else frozenset()
+        )
 
     sf_info = {
         r.surface_form: (int(r.sf_id), float(r.annotation_prob)) for r in sf_rows
@@ -157,16 +170,6 @@ def build_model(
 
     vocab = {r.token: (int(r.token_id), float(r.icf)) for r in vocab_rows}
 
-    canon_map: dict = {}
-    disambig: frozenset = frozenset()
-    if redirects is not None:
-        from ..operators.closure import redirect_closure
-
-        canon_map = {
-            r.src_uri: r.dst_uri for r in redirect_closure(redirects).collect()
-        }
-    if disambiguations is not None:
-        disambig = frozenset(r.uri for r in disambiguations.collect())
     return LinkingModel(
         automaton, sf_info, candidates, vocab, entity_vecs, canon_map, disambig
     )

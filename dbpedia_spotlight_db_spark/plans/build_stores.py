@@ -32,6 +32,22 @@ from ..functions.text import tokenize
 from ..operators.salted_agg import salted_count
 from ..operators.spotting import spot_ngram_join
 
+# The seven store tables a warehouse holds, each with the key the
+# annotate pipeline joins it on. jobs/build_stores.py writes every
+# table bucketed + sorted on its key (SURVEY.md §4.3), so the
+# sort-merge-bucket fallback (stores beyond the broadcast budget)
+# shuffles ONLY the probe side — tests/test_bucketed.py pins that the
+# bucketed scan contributes no Exchange and no Sort.
+STORE_BUCKET_KEYS = {
+    "entities": "entity_id",        # J1/J5 canonical lookup
+    "surface_forms": "sf_id",       # T3->J1 spot attach
+    "candidate_map": "sf_id",       # J1 candidate lookup
+    "tokens": "token_id",           # T2 vocabulary attach
+    "context_counts": "entity_id",  # J3 context attach
+    "entity_vectors": "entity_id",  # J3/C2 vector attach
+    "icf": "token_id",              # A5 weight attach
+}
+
 
 def _dense_ids(df: DataFrame, key: str, id_col: str) -> DataFrame:
     """Deterministic 64-bit id per distinct key: xxhash64 of the key

@@ -173,13 +173,9 @@ def run_flagship_resumable(
     stores -> annotations (per-lang units) -> triples. Killing the
     process between phases and re-running with the same run_id skips
     completed work and yields the identical triples relation."""
-    from ..entrypoint import (
-        annotate_to_triples,
-        documents_as_pages,
-        world_model_bc,
-        world_stores,
-    )
+    from ..entrypoint import documents_as_pages, world_model_bc, world_stores
     from .annotate_fused import annotate_fused
+    from .build_stores import STORE_BUCKET_KEYS
     from .materialize import materialize_triples
     from ..plans.annotate import AnnotateConfig
 
@@ -191,10 +187,7 @@ def run_flagship_resumable(
     # checkpointed tables (cheap collects over columnar files)
     stores = world_stores(spark, docs)
     ck_stores: dict = dict(stores)
-    for tbl in (
-        "entities", "surface_forms", "candidate_map",
-        "tokens", "context_counts", "entity_vectors", "icf",
-    ):
+    for tbl in STORE_BUCKET_KEYS:
         ck_stores[tbl] = run.phase(f"store_{tbl}", lambda t=tbl: stores[t])
     entities_ck = ck_stores["entities"]
     model_bc = world_model_bc(spark, ck_stores)

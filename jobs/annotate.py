@@ -7,21 +7,23 @@ on a multi-executor cluster").
         --out <triples destination> \
         --run-id <resume key> [--checkpoint-root <dir>] [--langs en,fr]
 
-Reads the pages table (partition-pruned by --langs), loads the count
-stores built by jobs/build_stores (or the fixture world when --stores
-is 'world:<sf_dir>'), broadcasts the linking model, runs the map-only
-fused annotator, and writes (subj, pred, obj) triples through the
-catalog seam. With --checkpoint-root + --run-id the mention pairs are
-materialized at the P1→P3 stage boundary and a completed checkpoint
-(_SUCCESS present) is re-read on re-run instead of re-annotating the
-corpus. For full phase/unit-level lineage + resume (per-store, per
-lang), drive plans/lineage.run_flagship_resumable instead.
+Reads the pages table (partition-pruned by --langs), loads the
+warehouse jobs/build_stores.py wrote (its redirects and disambiguation
+pages baked into the broadcast model) through ``entrypoint.load_model``,
+runs the map-only fused annotator, and writes (subj, pred, obj)
+triples through the catalog seam. With --checkpoint-root + --run-id
+the mention pairs are materialized at the P1→P3 stage boundary and a
+completed checkpoint (_SUCCESS present) is re-read on re-run instead
+of re-annotating the corpus. For full phase/unit-level lineage +
+resume (per-store, per lang), drive plans/lineage.run_flagship_resumable
+instead.
 
 The SparkSession is built WITHOUT a master so spark-submit supplies
-cluster/master/executor config; local smoke:
+cluster/master/executor config; local smoke ('world:<sf_dir>' in
+--pages/--stores stands for the fixture world's pages/stores):
 
-    python jobs/annotate.py --pages world:/root/testdata/sf0.001 \
-        --stores world:/root/testdata/sf0.001 --out /tmp/triples_out
+    python jobs/annotate.py --pages <pages parquet> --stores /tmp/wh \
+        --out /tmp/triples_out
 """
 
 from __future__ import annotations
@@ -47,47 +49,20 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--langs", default=None, help="comma-separated lang partition filter")
     args = ap.parse_args(argv)
 
+    from dbpedia_spotlight_db_spark.entrypoint import (
+        annotate_to_triples,
+        load_model,
+        load_pages,
+    )
     from dbpedia_spotlight_db_spark.session import get_spark
     from dbpedia_spotlight_db_spark.sources import catalog
 
     spark = get_spark("kg-annotate")
-
-    if args.stores.startswith("world:"):
-        from dbpedia_spotlight_db_spark.entrypoint import world_model_bc, world_stores
-
-        sf_dir = args.stores.split(":", 1)[1]
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        stores = world_stores(spark, docs)
-        model_bc = world_model_bc(spark, stores)
-    else:
-        from dbpedia_spotlight_db_spark.plans.annotate_fused import build_model
-
-        stores = {
-            name: catalog.load(spark, name, args.stores)
-            for name in (
-                "entities", "surface_forms", "candidate_map",
-                "tokens", "context_counts", "entity_vectors", "icf",
-            )
-        }
-        redirects = None
-        if catalog.exists(args.stores, "redirects"):
-            redirects = catalog.load(spark, "redirects", args.stores)
-        model_bc = spark.sparkContext.broadcast(build_model(stores, redirects))
-
-    if args.pages.startswith("world:"):
-        from dbpedia_spotlight_db_spark.entrypoint import documents_as_pages
-
-        sf_dir = args.pages.split(":", 1)[1]
-        pages = documents_as_pages(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        )
-    else:
-        pages = spark.read.parquet(args.pages)
+    stores, model_bc = load_model(spark, args.stores)
+    pages = load_pages(spark, args.pages)
     if args.langs:
         # partition-pruned on a lang-partitioned pages table
         pages = pages.filter(F.col("lang").isin(*args.langs.split(",")))
-
-    from dbpedia_spotlight_db_spark.entrypoint import annotate_to_triples
 
     npart = spark.sparkContext.defaultParallelism * 4
     pages = pages.repartition(npart)

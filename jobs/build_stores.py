@@ -4,10 +4,14 @@ prod, partitioned Parquet + manifest locally).
 
     spark-submit --py-files dist/engine.zip jobs/build_stores.py \
         --corpus <parquet of (doc_id, text, links)> \
-        --out <store warehouse root> [--redirects <parquet src_uri,dst_uri>]
+        --out <store warehouse root> \
+        [--redirects <parquet of src_uri, dst_uri>] \
+        [--disambiguations <parquet of uri>]
 
 This is the equivalent of the reference's wikistats ingestion + store
-serialization, re-expressed as salted, skew-aware aggregations.
+serialization, re-expressed as salted, skew-aware aggregations. The
+model loader (``entrypoint.load_model``) bakes the saved redirects and
+disambiguation pages into the broadcast model.
 """
 
 from __future__ import annotations
@@ -18,20 +22,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# production physical layout (SURVEY.md §4.3): every store table is
-# bucketed + sorted on the key the annotate pipeline joins it on, so
-# the sort-merge-bucket fallback (stores beyond the broadcast budget)
-# shuffles ONLY the probe side — tests/test_bucketed.py pins that the
-# bucketed scan contributes no Exchange and no Sort
-STORE_BUCKET_KEYS = {
-    "entities": "entity_id",        # J1/J5 canonical lookup
-    "surface_forms": "sf_id",       # T3->J1 spot attach
-    "candidate_map": "sf_id",       # J1 candidate lookup
-    "tokens": "token_id",           # T2 vocabulary attach
-    "context_counts": "entity_id",  # J3 context attach
-    "entity_vectors": "entity_id",  # J3/C2 vector attach
-    "icf": "token_id",              # A5 weight attach
-}
+# STORE_BUCKET_KEYS is imported from here too (tests/test_bucketed.py)
+from dbpedia_spotlight_db_spark.plans.build_stores import (
+    STORE_BUCKET_KEYS,
+    build_stores,
+)
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -39,11 +34,11 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--corpus", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--redirects", default=None)
+    ap.add_argument("--disambiguations", default=None)
     ap.add_argument("--salt-n", type=int, default=32)
     ap.add_argument("--n-buckets", type=int, default=8)
     args = ap.parse_args(argv)
 
-    from dbpedia_spotlight_db_spark.plans.build_stores import build_stores
     from dbpedia_spotlight_db_spark.session import get_spark
     from dbpedia_spotlight_db_spark.sources import catalog
 
@@ -57,8 +52,9 @@ def main(argv: list[str] | None = None) -> None:
         catalog.save_bucketed(
             stores[name], name, args.out, key, n_buckets=args.n_buckets
         )
-    if args.redirects:
-        catalog.save(spark.read.parquet(args.redirects), "redirects", args.out)
+    for name in ("redirects", "disambiguations"):
+        if getattr(args, name):
+            catalog.save(spark.read.parquet(getattr(args, name)), name, args.out)
     print(
         f"wrote {len(STORE_BUCKET_KEYS)} store tables to {args.out} "
         f"(bucketed x{args.n_buckets} on their join keys)"

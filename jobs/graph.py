@@ -31,8 +31,7 @@ tail BEFORE the analytics (at web scale most pairs co-occur once).
 
 Local smoke:
 
-    python jobs/graph.py --triples world:/root/testdata/sf0.001 \
-        --out /tmp/graph_out
+    python jobs/graph.py --triples world:<sf_dir> --out /tmp/graph_out
 """
 
 from __future__ import annotations
@@ -45,9 +44,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
+from dbpedia_spotlight_db_spark.entrypoint import (
+    annotate_to_triples,
+    load_model,
+    load_pages,
+)
 from dbpedia_spotlight_db_spark.operators.closure import pagerank
 from dbpedia_spotlight_db_spark.operators.dedup import connected_components
 from dbpedia_spotlight_db_spark.plans.materialize import PRED_MENTIONS
+from dbpedia_spotlight_db_spark.sources import catalog
 
 _NT_RES = "http://dbpedia.org/resource/"
 _NT_REL = "http://dbpedia.org/ontology/related"
@@ -116,22 +121,15 @@ def build_graph(
 
 def _load_triples(spark, spec: str) -> DataFrame:
     if spec.startswith("world:"):
-        from dbpedia_spotlight_db_spark.entrypoint import (
-            annotate_to_triples,
-            documents_as_pages,
-            world_stores,
+        stores, model_bc = load_model(spark, spec)
+        return annotate_to_triples(
+            spark, load_pages(spark, spec), stores, model_bc
         )
-
-        sf_dir = spec.split(":", 1)[1]
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        stores = world_stores(spark, docs)
-        return annotate_to_triples(spark, documents_as_pages(docs), stores)
-    return spark.read.parquet(os.path.join(spec, "triples"))
+    return catalog.load(spark, "triples", spec)
 
 
 def main(argv=None) -> None:
     from dbpedia_spotlight_db_spark.session import get_spark
-    from dbpedia_spotlight_db_spark.sources import catalog
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--triples", required=True)

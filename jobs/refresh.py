@@ -42,11 +42,11 @@ with its manifest's schema (no inference job) and the save counts its
 rows inside the write job, so the save of the merged snapshot is the
 cycle's only Spark action (its jobs are that write's query stages).
 
-Local smoke:
+Local smoke (a base that jobs/annotate.py wrote from /tmp/wh):
 
     python jobs/refresh.py --base /tmp/base_out \
-        --pages world:/root/testdata/sf0.001 \
-        --stores world:/root/testdata/sf0.001 --out /tmp/refresh_out
+        --pages <delta pages parquet> --stores /tmp/wh \
+        --out /tmp/refresh_out --gone-urls <tombstones parquet>
 """
 
 from __future__ import annotations
@@ -59,7 +59,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from dbpedia_spotlight_db_spark.entrypoint import (
+    annotate_to_triples,
+    load_model,
+    load_pages,
+)
 from dbpedia_spotlight_db_spark.plans.materialize import PRED_MENTIONS
+from dbpedia_spotlight_db_spark.sources import catalog
 
 
 def merge_triples(base, fresh, delta_urls, gone_urls=None):
@@ -122,35 +128,11 @@ def main(argv: list[str] | None = None) -> None:
                          "(smoke/testing aid; production passes a delta table)")
     args = ap.parse_args(argv)
 
-    from dbpedia_spotlight_db_spark.entrypoint import (
-        annotate_to_triples,
-        documents_as_pages,
-        world_model_bc,
-        world_stores,
-    )
     from dbpedia_spotlight_db_spark.session import get_spark
-    from dbpedia_spotlight_db_spark.sources import catalog
 
     spark = get_spark("kg-refresh")
-
-    if args.stores.startswith("world:"):
-        sf_dir = args.stores.split(":", 1)[1]
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        stores = world_stores(spark, docs)
-        model_bc = world_model_bc(spark, stores)
-    else:
-        raise SystemExit(
-            "store-warehouse loading is jobs/annotate.py's path; refresh "
-            "smoke uses world:<sf_dir> (same seam, same model builder)"
-        )
-
-    if args.pages.startswith("world:"):
-        sf_dir = args.pages.split(":", 1)[1]
-        pages = documents_as_pages(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        )
-    else:
-        pages = spark.read.parquet(args.pages)
+    stores, model_bc = load_model(spark, args.stores)
+    pages = load_pages(spark, args.pages)
     if args.delta_filter:
         pages = pages.filter(args.delta_filter)
 

@@ -108,6 +108,7 @@ def test_triples_fused_equals_relational(spark, small_pages, stores):
         WORLD_DISAMBIG,
         WORLD_REDIRECTS,
         annotate_to_triples,
+        world_model_bc,
     )
     from dbpedia_spotlight_db_spark.plans.materialize import (
         canonical_annotations,
@@ -117,7 +118,12 @@ def test_triples_fused_equals_relational(spark, small_pages, stores):
     def tset(df):
         return {(r.subj, r.pred, r.obj) for r in df.collect()}
 
-    fused = tset(annotate_to_triples(spark, small_pages.repartition(7), stores))
+    fused = tset(
+        annotate_to_triples(
+            spark, small_pages.repartition(7), stores,
+            world_model_bc(spark, stores),
+        )
+    )
     red = spark.createDataFrame(WORLD_REDIRECTS, ["src_uri", "dst_uri"])
     dis = spark.createDataFrame([(u,) for u in WORLD_DISAMBIG], ["uri"])
     canon = canonical_annotations(

@@ -56,6 +56,7 @@ def test_resumable_equals_direct_triples(spark, run_root):
     from dbpedia_spotlight_db_spark.entrypoint import (
         annotate_to_triples,
         documents_as_pages,
+        world_model_bc,
         world_stores,
     )
 
@@ -63,9 +64,11 @@ def test_resumable_equals_direct_triples(spark, run_root):
         run_flagship_resumable(spark, SF_DIR, run_root, "run_a")
     )
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    stores = world_stores(spark, docs)
     direct = _triples_set(
         annotate_to_triples(
-            spark, documents_as_pages(docs), world_stores(spark, docs)
+            spark, documents_as_pages(docs), stores,
+            world_model_bc(spark, stores),
         )
     )
     assert lineage == direct and lineage

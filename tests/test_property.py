@@ -2,6 +2,7 @@
 with trivially-correct pure-Python references on random inputs.
 
 - redirect_closure == visited-set chain resolution (cycles -> self)
+- redirect_closure == closure_dict on duplicate sources, any partitioning
 - Aho-Corasick spotting == brute-force n-gram dictionary matching
 - extract_text(html-wrap(text)) == text byte-identically, incl. unicode
 """
@@ -95,16 +96,45 @@ def test_closure_matches_reference_hypothesis(spark, edges):
     """Hypothesis-driven closure fuzz (shrinking + directed @example
     seeds for the chain-into-cycle class the fixed-seed fuzz missed):
     distributed closure == visited-set reference on arbitrary
-    functional graphs over 8 nodes."""
+    functional graphs over 8 nodes, self-loops included."""
     from dbpedia_spotlight_db_spark.operators.closure import redirect_closure
 
-    edges = {s: d for s, d in edges.items() if s != d}
-    if not edges:
-        return
     df = spark.createDataFrame(list(edges.items()), ["src_uri", "dst_uri"])
     got = {(r.src_uri, r.dst_uri) for r in redirect_closure(df).collect()}
     want = set(resolve_reference(edges).items())
     assert got == want, (edges, got, want)
+
+
+@given(
+    st.lists(
+        st.tuples(st.sampled_from(NODES), st.sampled_from(NODES)),
+        min_size=1,
+        max_size=12,
+    )
+)
+@example([("a", "c"), ("a", "b"), ("b", "d"), ("c", "c")])
+@example([("a", "b"), ("a", "a"), ("b", "a"), ("b", "c")])
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_closures_agree_on_duplicate_sources(spark, edges):
+    """Edge lists with duplicate sources and self-loops: the smallest
+    dst wins, so redirect_closure gives one result over any
+    partitioning, and it equals closure_dict."""
+    from dbpedia_spotlight_db_spark.operators.closure import (
+        closure_dict,
+        redirect_closure,
+    )
+
+    df = spark.createDataFrame(edges, ["src_uri", "dst_uri"])
+    got = [
+        {(r.src_uri, r.dst_uri) for r in redirect_closure(df.repartition(k)).collect()}
+        for k in (1, 3, 5)
+    ]
+    assert got[0] == got[1] == got[2], (edges, got)
+    assert got[0] == set(closure_dict(edges).items()), edges
 
 
 @given(edge_maps())
